@@ -28,7 +28,7 @@ from ..functions.text import title_from_filename
 from ..functions.vectors import as_double, cosine, query_vector_lit
 from ..operators.chunker import chunk_text
 from ..operators.multimodal import decode_image_fake, media_table
-from ..retrieval.bm25 import bm25_scores
+from ..retrieval.bm25 import bm25_scores, release_index
 from ..retrieval.embedder import HashEmbedder, embed_query
 from ..retrieval.hybrid import SearchMode, rank_top, route_topic, rrf_fuse
 from ..sources.catalog import DEFAULT_SF_DIR, load_table
@@ -59,6 +59,9 @@ class SparkEngine:
         self._uploads: dict[str, dict[str, Any]] = {}  # doc_id -> row dict
         self._tombstones: set[str] = set()
         self._next_upload_ord = 1
+        # title_filter -> the serving view keyword search indexes; memoized
+        # so repeated searches reuse one cached postings lineage.
+        self._kw_docs: dict[str | None, DataFrame] = {}
 
     def close(self) -> dict[str, int]:
         """Release session-pinned caches (bm25 live indexes, streaming
@@ -96,6 +99,26 @@ class SparkEngine:
         if self._tombstones:
             docs = docs.filter(~F.col("doc_id").isin(sorted(self._tombstones)))
         return docs
+
+    def _keyword_docs(self, title_filter: str | None) -> DataFrame:
+        docs = self._kw_docs.get(title_filter)
+        if docs is None:
+            docs = self._docs()
+            if title_filter:
+                # F8 title LIKE filter — source+id synthesized filename chain
+                t = title_from_filename(
+                    F.concat(F.col("source"), F.lit("_report_"), F.col("doc_id"), F.lit(".pdf"))
+                )
+                docs = docs.filter(t.contains(title_filter))
+            self._kw_docs[title_filter] = docs
+        return docs
+
+    def _serving_view_changed(self) -> None:
+        """Release the keyword indexes of the serving view an upload or
+        delete superseded; the next search indexes the new view."""
+        for docs in self._kw_docs.values():
+            release_index(docs, "doc_id", "text")
+        self._kw_docs.clear()
 
     def _doc_row(self, document_id: str) -> dict[str, Any]:
         if document_id in self._tombstones:
@@ -149,18 +172,12 @@ class SparkEngine:
             mode_e = SearchMode(mode)
         except ValueError:
             raise BadRequest(f"Invalid search mode: {mode}. Use: vector, hybrid, keyword")
-        docs = self._docs()
-        if title_filter:
-            # F8 title LIKE filter — source+id synthesized filename chain
-            t = title_from_filename(
-                F.concat(F.col("source"), F.lit("_report_"), F.col("doc_id"), F.lit(".pdf"))
-            )
-            docs = docs.filter(t.contains(title_filter))
         terms = [t for t in query.lower().split() if t]
         if not terms:
             raise BadRequest("Empty query")
 
-        kw = bm25_scores(docs, "doc_id", "text", terms)
+        if mode_e is not SearchMode.VECTOR:
+            kw = bm25_scores(self._keyword_docs(title_filter), "doc_id", "text", terms)
         if mode_e is SearchMode.KEYWORD:
             ranked = (
                 kw.select(F.col("doc_key").alias("doc_id"), F.round("score", 4).alias("score"))
@@ -363,6 +380,8 @@ class SparkEngine:
             "error_message": err,
             "text": text,
         }
+        if status == "completed":
+            self._serving_view_changed()
         return {
             "document_id": doc_id,
             "status": status,
@@ -377,6 +396,7 @@ class SparkEngine:
         applies it durably."""
         self._doc_row(document_id)  # 404 if unknown
         self._tombstones.add(document_id)
+        self._serving_view_changed()
         return {"message": f"Document deleted: {document_id}"}
 
     # ---------------------------------------------------------------- chunks

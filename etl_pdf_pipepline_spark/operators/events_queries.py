@@ -188,7 +188,7 @@ def events_user_gaps_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events_user_gaps forced onto the raw-corpus scan path — gates the
     cold branch every run regardless of layout freshness (the same
     both-branches-gated pattern as events_sessionization_scan)."""
-    from ..plans.bucketed import force_scan_path
+    from ..sources.artifact import force_scan_path
 
     with force_scan_path():
         return events_user_gaps(spark, sf_dir)
@@ -207,17 +207,15 @@ def _events_user_sliced(
     match the current events file stats; `scan_forced()` honors the
     force_scan_path override so the scan branch stays measurable and
     gate-covered (events_sessionization_scan)."""
-    from ..plans.bucketed import scan_forced
-    from ..plans.zorder import zorder_events_path, zorder_pruned_files
+    from ..plans.zorder import ZORDER_EVENTS, zorder_pruned_files
+    from ..sources.artifact import scan_forced
     from ..sources.catalog import (
         _normalize_events_ts,
         pin_events_read_confs,
         raw_pruned_files,
         read_parquet_cached,
         read_parquet_paths_cached,
-        table_stat_signature,
     )
-    from ..sources.manifest import read_meta
 
     if not scan_forced():
         # r13 final session: try the RAW directory's own footer stats
@@ -249,12 +247,12 @@ def _events_user_sliced(
         # tasks instead of 256 for a user_id<10 probe, and the ~4 ms/
         # task scheduling floor goes with it. Pruning only shrinks the
         # read set; the exact predicate still applies downstream.
-        files = zorder_pruned_files(sf_dir, user_hi_exclusive=user_hi_exclusive)
-        if files:
-            return read_parquet_paths_cached(spark, tuple(files))
-        path = zorder_events_path(sf_dir)
-        meta = read_meta(path) or {}
-        if meta.get("source_signature") == table_stat_signature(sf_dir, ("events",)):
+        meta = ZORDER_EVENTS.fresh(sf_dir)
+        if meta is not None:
+            path = ZORDER_EVENTS.path(sf_dir)
+            files = zorder_pruned_files(meta, path, user_hi_exclusive)
+            if files:
+                return read_parquet_paths_cached(spark, tuple(files))
             return read_parquet_cached(spark, path)
     return load_table(spark, sf_dir, "events")
 
@@ -325,7 +323,7 @@ def events_sessionization_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cold branch every run regardless of whether a z-layout was built
     earlier in the session (the both-branches-gated pattern of
     revenue_by_nation_scan / shipping_priority_scan)."""
-    from ..plans.bucketed import force_scan_path
+    from ..sources.artifact import force_scan_path
 
     with force_scan_path():
         return events_sessionization(spark, sf_dir)

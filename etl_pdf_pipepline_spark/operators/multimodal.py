@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
+from ..sources.artifact import Artifact
 from ..sources.catalog import load_table
 
 MIN_IMAGE_SIDE = 100  # reference min_width/min_height (image_extractor.py:30)
@@ -280,50 +281,24 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def media_manifest_path(sf_dir: str) -> str:
-    import hashlib
-    import os
+def _write_media_manifest(spark: SparkSession, sf_dir: str, path: str) -> None:
+    media_metadata(spark, sf_dir).write.mode("overwrite").parquet(path)
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"media_manifest_{tag}")
+
+# Digest-at-ingest for the media lake: the per-object metadata row
+# (media_id, media_type, n_bytes, content_sha) persisted ONCE. media_metadata's
+# cost at 100 TB is the sha2 pass over every payload byte — a floor no plan
+# shape removes (SCALING.md) — so a lake pays it at ingest and answers every
+# later metadata query from this NARROW table (four thin columns, no payload
+# read, no digest). A real ingest pipeline computes the digest while the
+# bytes are in hand; re-deriving it here from the source is the local-corpus
+# equivalent.
+MEDIA_MANIFEST = Artifact("media_manifest", ("documents",), _write_media_manifest)
+media_manifest_path = MEDIA_MANIFEST.path
 
 
 def ensure_media_manifest(spark: SparkSession, sf_dir: str) -> str:
-    """Digest-at-ingest for the media lake: persist the per-object
-    metadata row (media_id, media_type, n_bytes, content_sha) ONCE, with
-    the standard serve-or-build freshness record (stat signature of the
-    source, CAS-committed — the same lifecycle as ensure_ivf_index /
-    ensure_lsh_band_index / the bucketed facts). The economics this
-    exists for: media_metadata's cost at 100 TB is the sha2 pass over
-    every payload byte — a floor no plan shape removes (the r9/r10
-    dedicated probes pinned the digest pass as the wall; SCALING.md) —
-    so a lake should pay it at ingest and answer every later metadata
-    query from this NARROW table (four thin columns, no payload read,
-    no digest). A real ingest pipeline computes the digest while the
-    bytes are already in hand; re-deriving it here from the source is
-    the local-corpus equivalent."""
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import commit_meta, read_meta
-
-    path = media_manifest_path(sf_dir)
-    sig = table_stat_signature(sf_dir, ("documents",))
-    meta = read_meta(path) or {}
-    if meta.get("source_signature") == sig:
-        return path
-    media = media_table(spark, sf_dir)
-    (
-        media.select(
-            "media_id",
-            "media_type",
-            F.octet_length("content").alias("n_bytes"),
-            F.sha2("content", 256).alias("content_sha"),
-        )
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    commit_meta(path, {"source_signature": sig})
-    return path
+    return MEDIA_MANIFEST.ensure(spark, sf_dir)
 
 
 @query(
@@ -427,7 +402,7 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides (oracle too — the gate hash is order-insensitive, so the
     contract is unchanged and the comparison stays engine-vs-engine on
     identical work). Measured in-session min-of-2
-    (tools/probe_frame_r8.py): sf30 2.14→1.14 s vs DuckDB 0.96→0.63 s
+    (SCALING.md): sf30 2.14→1.14 s vs DuckDB 0.96→0.63 s
     (2.23×→1.81×); sf100 12.83→3.99 s vs 6.47→2.41 s (1.98×→1.66×).
     The digest stays sha256: md5 (the only other cross-engine option)
     sped DuckDB up 1.7× but Spark not at all — sha256 minimizes the

@@ -32,6 +32,7 @@ from ..functions.vectors import (
     round_half_away,
 )
 from ..registry import query
+from ..sources.artifact import Artifact
 from ..sources.catalog import load_table
 
 # NULL (not NaN) on zero-norm inputs, mirroring functions/vectors.py::cosine —
@@ -365,15 +366,6 @@ def ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_index_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"ivf_index_{tag}")
-
-
 def _assign_to_centroids(d: DataFrame, c: DataFrame) -> DataFrame:
     """(vec_id, centroid_id, embedding): nearest centroid per vector,
     the rounded-cosine + smallest-id tie-break the oracle uses. The ONE
@@ -394,12 +386,13 @@ def _assign_to_centroids(d: DataFrame, c: DataFrame) -> DataFrame:
     )
 
 
-def persist_ivf_index(
+def _write_ivf_index(
     spark: SparkSession,
     sf_dir: str,
+    path: str,
     exclude_vec_id: int | None = None,
     base_filter=None,
-) -> str:
+) -> None:
     """Materialize the IVF layout the probe path assumes: trained
     centroids as a k-row parquet, vectors written partitionBy(centroid_id)
     — one directory per cell, so a probe of nprobe cells is DIRECTORY
@@ -412,7 +405,6 @@ def persist_ivf_index(
     MATERIALIZED without changing the centroid training set — the
     incremental gate uses it to build a base index whose missing slice
     arrives later through extend_ivf_index."""
-    path = ivf_index_path(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     if exclude_vec_id is not None:
         emb = emb.filter(F.col("vec_id") != exclude_vec_id)
@@ -432,53 +424,31 @@ def persist_ivf_index(
         .mode("overwrite")
         .parquet(f"{path}/vectors")
     )
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import commit_meta
 
-    # The freshness record names the BUILD VARIANT beside the source
-    # signature: the gate queries build partial indexes (exclude_vec_id /
-    # base_filter) at the same path, and ensure_ivf_index must never
-    # mistake one for a fresh full-corpus index.
-    commit_meta(
-        path,
-        {
-            "source_signature": table_stat_signature(sf_dir, ("embeddings",)),
-            "exclude_vec_id": exclude_vec_id,
-            "partial": base_filter is not None,
-        },
-    )
-    return path
+
+def _ivf_variant(sf_dir: str, exclude_vec_id: int | None = None, base_filter=None) -> dict:
+    # The gate queries build partial indexes (exclude_vec_id / base_filter)
+    # at the same path; the record names the build variant so steady-state
+    # serving never mistakes one for a full-corpus index.
+    return {"exclude_vec_id": exclude_vec_id, "partial": base_filter is not None}
+
+
+IVF_INDEX = Artifact("ivf_index", ("embeddings",), _write_ivf_index, _ivf_variant)
+ivf_index_path = IVF_INDEX.path
+
+
+def persist_ivf_index(
+    spark: SparkSession,
+    sf_dir: str,
+    exclude_vec_id: int | None = None,
+    base_filter=None,
+) -> str:
+    return IVF_INDEX.rebuild(spark, sf_dir, exclude_vec_id=exclude_vec_id, base_filter=base_filter)
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    """Serve-or-build for the persisted IVF layout — the lifecycle face
-    the other three maintained artifacts already have (bucketed facts:
-    plans/bucketed.py; LSH bands: dedup.ensure_lsh_band_index; z-order:
-    zorder.ensure_zorder_events): reuse when the CAS-committed freshness
-    record matches the current embeddings files AND the index is a
-    full-corpus build (no exclusion, no base_filter), rebuild otherwise.
-    This is the reader of the source_signature persist_ivf_index
-    commits — without it the record was write-only (r8 review)."""
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import read_meta
-
-    path = ivf_index_path(sf_dir)
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == table_stat_signature(sf_dir, ("embeddings",))
-        # Build-variant keys must be PRESENT, not merely falsy: a legacy
-        # meta record (pre-variant persist_ivf_index wrote only
-        # source_signature, even for exclude/base_filter builds) would
-        # otherwise pass both `is None` checks by key absence and a
-        # surviving partial index from an older checkout could be served
-        # as full (ADVICE r9). Absent keys → rebuild.
-        and "exclude_vec_id" in meta
-        and meta["exclude_vec_id"] is None
-        and "partial" in meta
-        and meta["partial"] is False
-    ):
-        return path
-    return persist_ivf_index(spark, sf_dir)
+    """Serve-or-build for the persisted full-corpus IVF layout."""
+    return IVF_INDEX.ensure(spark, sf_dir)
 
 
 def extend_ivf_index(
@@ -1216,23 +1186,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unbounded per-vector listing — no terminal sort (r12 doctrine)
 
 
-def int8_codes_path(sf_dir: str) -> str:
-    """Warehouse location of this corpus's persisted int8 code table,
-    keyed by corpus dir — same convention as dedup.signature_manifest_path."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"int8_codes_{tag}")
-
-
-def _emb_signature(sf_dir: str) -> str:
-    from ..sources.catalog import table_stat_signature
-
-    return table_stat_signature(sf_dir, ("embeddings",))
-
-
 def _int8_code_table(emb: DataFrame) -> DataFrame:
     """(vec_id, scale, q8) — the quantization projection, shared by the
     listing query, the ingest-slot builder, and the live fallback."""
@@ -1243,37 +1196,26 @@ def _int8_code_table(emb: DataFrame) -> DataFrame:
     )
 
 
-def ensure_int8_codes(spark: SparkSession, sf_dir: str) -> str:
-    """Serve-or-build for the persisted int8 code table — codes are a
-    pure function of the embeddings, so production computes them ONCE at
-    ingest (the same lifecycle slot as the minhash/simhash signature
-    manifests) and every quantized-serving query reads int8 + one double
-    per row instead of re-projecting the float32 column. Standard CAS
-    meta record carries the embeddings-table stat signature."""
-    from ..sources.catalog import load_table
-    from ..sources.manifest import commit_meta, read_meta
+# Codes are a pure function of the embeddings, so production computes them
+# ONCE at ingest (the same lifecycle slot as the minhash/simhash signature
+# tables) and every quantized-serving query reads int8 + one double per row
+# instead of re-projecting the float32 column.
+INT8_CODES = Artifact(
+    "int8_codes",
+    ("embeddings",),
+    lambda spark, sf_dir, path: _int8_code_table(
+        load_table(spark, sf_dir, "embeddings")
+    ).write.mode("overwrite").parquet(path),
+)
+int8_codes_path = INT8_CODES.path
 
-    path = int8_codes_path(sf_dir)
-    sig = _emb_signature(sf_dir)
-    if (read_meta(path) or {}).get("source_signature") == sig:
-        return path
-    emb = load_table(spark, sf_dir, "embeddings")
-    _int8_code_table(emb).write.mode("overwrite").parquet(path)
-    commit_meta(path, {"source_signature": sig})
-    return path
+
+def ensure_int8_codes(spark: SparkSession, sf_dir: str) -> str:
+    return INT8_CODES.ensure(spark, sf_dir)
 
 
 def int8_codes_servable(spark: SparkSession, sf_dir: str) -> bool:
-    """Routing predicate — same contract as dedup.signatures_servable:
-    fresh record required, force_scan_path honored, never builds inside
-    a serving query."""
-    from ..plans.bucketed import scan_forced
-    from ..sources.manifest import read_meta
-
-    if scan_forced():
-        return False
-    meta = read_meta(int8_codes_path(sf_dir)) or {}
-    return meta.get("source_signature") == _emb_signature(sf_dir)
+    return INT8_CODES.servable(sf_dir) is not None
 
 
 @query(
@@ -1352,15 +1294,6 @@ def _dequantized_query_cached(spark: SparkSession, sf_dir: str, dq: DataFrame) -
 # ---------------------------------------------------------------------------
 
 
-def ivf_int8_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"ivf_int8_{tag}")
-
-
 def _quantize_to_cells(vecs: DataFrame) -> DataFrame:
     """(vec_id, centroid_id, scale, q8) from (vec_id, centroid_id, v):
     the ONE copy of the cell-coding projection, shared by the full build
@@ -1388,36 +1321,24 @@ def _write_int8_codes(spark: SparkSession, parent: str, path: str, mode: str) ->
     )
 
 
-def ensure_ivf_int8(spark: SparkSession, sf_dir: str) -> str:
-    """Serve-or-build for the int8-coded IVF cell layout: the full-corpus
-    float index (ensure_ivf_index — which itself rebuilds if stale) is
-    re-coded as (vec_id, scale, q8) partitioned by centroid_id. Cell
-    membership is COPIED from the float index, never re-derived — the
-    int8 layout is a storage projection of the same index, so the two
-    always agree on which directory a vector lives in. Freshness is the
-    embeddings stat signature (the same currency as every serve-or-build
-    artifact); a stale parent rebuild bumps the vectors files, but the
-    meta here pins the SOURCE, so one signature check covers both. The
-    `partial` variant key must be PRESENT and False — the incremental
-    gate builds a partial layout at this path (same discipline as
-    ensure_ivf_index's build-variant keys), and steady-state serving
-    must never mistake it for a full build."""
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import commit_meta, read_meta
+def _write_ivf_int8(spark: SparkSession, sf_dir: str, path: str) -> None:
+    # Cell membership is COPIED from the full-corpus float index (rebuilt
+    # first if stale), never re-derived: the int8 layout is a storage
+    # projection of the same index, so the two always agree on which
+    # directory a vector lives in.
+    _write_int8_codes(spark, ensure_ivf_index(spark, sf_dir), path, mode="overwrite")
 
-    path = ivf_int8_path(sf_dir)
-    sig = table_stat_signature(sf_dir, ("embeddings",))
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == sig
-        and "partial" in meta
-        and meta["partial"] is False
-    ):
-        return path
-    parent = ensure_ivf_index(spark, sf_dir)
-    _write_int8_codes(spark, parent, path, mode="overwrite")
-    commit_meta(path, {"source_signature": sig, "partial": False})
-    return path
+
+# The int8-coded IVF cell layout, (vec_id, scale, q8) partitioned by
+# centroid_id. Its record pins the SOURCE signature, so one check covers
+# the float parent too. `partial` must be present and False: the
+# incremental gate builds a partial layout at this path.
+IVF_INT8 = Artifact("ivf_int8", ("embeddings",), _write_ivf_int8, lambda sf_dir: {"partial": False})
+ivf_int8_path = IVF_INT8.path
+
+
+def ensure_ivf_int8(spark: SparkSession, sf_dir: str) -> str:
+    return IVF_INT8.ensure(spark, sf_dir)
 
 
 def extend_ivf_int8(

@@ -56,14 +56,11 @@ def _token_stat_batches(batches):
 
     r14 (VERDICT r13 ask #8 — rep-tail drift): the reused Python worker
     accumulates allocator high-water pages across hot reps (r13 saw the
-    kernel creep 2.5→5.4 s over 6 sf30 reps); a per-batch gc.collect()
-    + Arrow release_unused() pins it flat (probe_tokdrift_r14: drift
-    3.12× → 1.14× over 6 hot reps, steady-state wall unchanged —
-    2.00 vs 2.02 s min). The collect is amortized over whole batches
-    (10k rows default), never rows.
+    kernel creep 2.5→5.4 s over 6 sf30 reps); Arrow release_unused()
+    after each batch returns the pool's free pages. The per-batch
+    gc.collect() r14 added beside it cost ~0.1 s at sf0.1 and was
+    dropped; SCALING.md has the A/B and the sf1 drift check.
     """
-    import gc
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -103,7 +100,6 @@ def _token_stat_batches(batches):
             ["doc_id", "n_tokens", "n_distinct", "nonws"],
         )
         del toks, flat, parent, keep, agg
-        gc.collect()
         pa.default_memory_pool().release_unused()
 
 
@@ -165,7 +161,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       for an engine whose doctrine is JVM-side text ops; the remaining
       ratio is regex-tokenization cost both engines pay.
 
-    r7 sf100 adjudication (tools/probe_decomp_r7.py, min-of-2,
+    r7 sf100 adjudication (SCALING.md, min-of-2,
     in-session DuckDB): full 10.37 s vs DuckDB 5.75 s = 1.80× (the r6
     BENCH "2.26×" divided by a faster same-day DuckDB wall — ambient,
     not a plan change); unsorted floor 8.13 s, scan floor 0.58 s. The

@@ -29,9 +29,7 @@ values.
 
 from __future__ import annotations
 
-import hashlib
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +37,7 @@ from pyspark.sql import functions as F
 from ..functions.money import cents as _cents
 from ..functions.ordering import ordered_small
 from ..registry import query
+from ..sources.artifact import corpus_tag, force_scan_path, meta_matches, scan_forced
 from ..sources.catalog import load_table
 
 # Bucket count scales with the data like shuffle partitions do (and for
@@ -69,7 +68,7 @@ _REVENUE_ORACLE = """
 def bucketed_table_names(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Deterministic per-corpus table names (metastore is shared across
     gate runs at different sf dirs)."""
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+    tag = corpus_tag(sf_dir)
     return f"bkt_{tag}_lineitem", f"bkt_{tag}_orders"
 
 
@@ -152,37 +151,6 @@ def write_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return li_name, o_name
 
 
-_force_scan = False
-
-
-@contextmanager
-def force_scan_path():
-    """Routing override: inside this context bucketed_layout_exists reports
-    False, so the orderkey-join family constructs its scan-path plan even
-    when the layout is built. Two consumers: the *_scan gate variants
-    (both routing branches oracle-gated every run, independent of session
-    ordering — ADVICE r6) and bench.py's scan-path measurement (so the
-    layout's advantage is published as a visible delta, not silently
-    folded into the engine ratio). Plan construction is eager w.r.t.
-    routing (the branch is taken while building the DataFrame), so
-    wrapping construction alone is sufficient."""
-    global _force_scan
-    _force_scan = True
-    try:
-        yield
-    finally:
-        _force_scan = False
-
-
-def scan_forced() -> bool:
-    """Public face of the force_scan_path override — the routing
-    predicates of every layout/index family (bucketed facts here, the
-    BM25 postings in retrieval/queries.py) consult this instead of the
-    private module global, so the override has one name and one
-    semantics across families."""
-    return _force_scan
-
-
 def bucketed_layout_exists(spark: SparkSession, sf_dir: str) -> bool:
     """True when this corpus's bucketed fact layout is registered in the
     session catalog AND its freshness tag matches the current source
@@ -199,15 +167,16 @@ def bucketed_layout_exists(spark: SparkSession, sf_dir: str) -> bool:
     instead of serving stale buckets — same invalidation contract as any
     materialized index (bm25 postings, IVF centroids), now enforced
     rather than documented."""
-    if _force_scan:
+    if scan_forced():
         return False
     li_name, o_name = bucketed_table_names(spark, sf_dir)
     if not (spark.catalog.tableExists(li_name) and spark.catalog.tableExists(o_name)):
         return False
     from ..sources.manifest import read_meta
 
-    meta = read_meta(_meta_root(spark, sf_dir)) or {}
-    return meta.get("source_signature") == _source_signature(sf_dir)
+    return meta_matches(
+        read_meta(_meta_root(spark, sf_dir)), {"source_signature": _source_signature(sf_dir)}
+    )
 
 
 def revenue_from_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:

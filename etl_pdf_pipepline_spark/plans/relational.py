@@ -546,7 +546,7 @@ def _orders_custkey_sliced(
     testdata) and statless layouts fall through to the ordinary scan, so
     gate plans are unchanged. The exact predicate is ALWAYS applied
     downstream — pruning only shrinks the read set."""
-    from ..plans.bucketed import scan_forced
+    from ..sources.artifact import scan_forced
     from ..sources.catalog import raw_pruned_files, read_parquet_paths_cached
 
     if not scan_forced():

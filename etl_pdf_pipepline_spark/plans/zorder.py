@@ -41,7 +41,6 @@ the beyond-reference lake layer SURVEY.md §2.11+ claims.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -50,6 +49,7 @@ from pyspark.sql import functions as F
 from ..functions.money import cents as _cents
 from ..functions.ordering import ordered_small
 from ..registry import query
+from ..sources.artifact import Artifact
 from ..sources.catalog import load_table, read_parquet_cached, table_scalar_cached
 
 Z_BITS_PER_DIM = 8  # 256 cells per dimension, 16-bit Morton code
@@ -90,23 +90,13 @@ def _cell(col: Column, lo, hi, bits: int = Z_BITS_PER_DIM) -> Column:
     ).cast("long")
 
 
-def zorder_events_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"events_zorder_{tag}")
-
-
-def write_zorder_events(
-    spark: SparkSession, sf_dir: str, n_files: int | None = None
-) -> str:
+def _write_zorder_events(spark: SparkSession, sf_dir: str, path: str, n_files: int) -> dict:
     """Ingest-time z-ordered layout of events, clustered on (ts,
     user_id): scale both dimensions to 8-bit cells over their observed
     min/max (two 1-row driver fetches), range-partition + sort on the
     Morton code, write plain parquet. The z column itself is dropped —
     it exists to place rows; queries filter on the natural columns and
     parquet stats do the pruning."""
-    from ..session import derive_shuffle_partitions
-
     ev = load_table(spark, sf_dir, "events")
     lo_hi = ev.agg(
         F.min(F.col("ts").cast("double")).alias("tlo"),
@@ -118,11 +108,9 @@ def write_zorder_events(
         _cell(F.col("ts").cast("double"), lo_hi["tlo"], lo_hi["thi"]),
         _cell(F.col("user_id"), lo_hi["ulo"], lo_hi["uhi"]),
     )
-    path = zorder_events_path(sf_dir)
-    n = n_files or derive_shuffle_partitions(sf_dir)
     (
         ev.withColumn("z", z)
-        .repartitionByRange(n, "z")
+        .repartitionByRange(n_files, "z")
         .sortWithinPartitions("z")
         .drop("z")
         .write.mode("overwrite")
@@ -140,30 +128,18 @@ def write_zorder_events(
         .option("parquet.block.size", str(8 * 1024 * 1024))
         .parquet(path)
     )
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import commit_meta
-
-    commit_meta(
-        path,
-        {
-            "source_signature": table_stat_signature(sf_dir, ("events",)),
-            "n_files": n,
-            "layout_rev": ZORDER_LAYOUT_REV,
-            # Per-FILE (user_id, ts) min/max boxes, read once from the
-            # just-written footers (r13, guide §6): Spark's scan prunes
-            # ROW GROUPS from pushed filters, but it still schedules one
-            # task per file and opens every footer — at 256 files that
-            # ~4 ms/task floor IS the wall of a selective probe
-            # (SCALING.md sf100 decomposition). With the boxes in the
-            # layout's CAS meta, zorder_pruned_files() drops
-            # non-overlapping FILES from the read before Spark lists
-            # anything — manifest-style file skipping, same trick the
-            # lake layer's snapshot bounds use. ts is stored as epoch
-            # MICROS of the footer min/max.
-            "file_stats": _collect_file_stats(path),
-        },
-    )
-    return path
+    # Per-FILE (user_id, ts) min/max boxes, read once from the
+    # just-written footers (r13, guide §6): Spark's scan prunes
+    # ROW GROUPS from pushed filters, but it still schedules one
+    # task per file and opens every footer — at 256 files that
+    # ~4 ms/task floor IS the wall of a selective probe
+    # (SCALING.md sf100 decomposition). With the boxes in the
+    # layout's CAS meta, zorder_pruned_files() drops
+    # non-overlapping FILES from the read before Spark lists
+    # anything — manifest-style file skipping, same trick the
+    # lake layer's snapshot bounds use. ts is stored as epoch
+    # MICROS of the footer min/max.
+    return {"file_stats": _collect_file_stats(path)}
 
 
 def _collect_file_stats(path: str) -> dict[str, dict[str, int]]:
@@ -210,21 +186,37 @@ def _epoch_us(v) -> int:
     return int(v)
 
 
-def zorder_pruned_files(
-    sf_dir: str, user_hi_exclusive: int | None = None
-) -> list[str] | None:
-    """File names of the fresh z-layout overlapping `user_id <
-    user_hi_exclusive`, from the CAS meta's per-file boxes — or None when
-    the layout is stale/absent/statless (callers fall back to their scan
-    path). Pruning only SHRINKS the read set; callers still apply the
-    exact predicate, so results are unchanged by construction."""
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import read_meta
+def _zorder_variant(sf_dir: str, n_files: int | None = None) -> dict:
+    # Serving accepts a fresh layout of any file count; ensure and rebuild
+    # pin the count they were asked for.
+    pinned = {} if n_files is None else {"n_files": n_files}
+    return {**pinned, "layout_rev": ZORDER_LAYOUT_REV}
 
-    path = zorder_events_path(sf_dir)
-    meta = read_meta(path) or {}
-    if meta.get("source_signature") != table_stat_signature(sf_dir, ("events",)):
-        return None
+
+ZORDER_EVENTS = Artifact("events_zorder", ("events",), _write_zorder_events, _zorder_variant)
+zorder_events_path = ZORDER_EVENTS.path
+
+
+def _n_files(sf_dir: str, n_files: int | None) -> int:
+    from ..session import derive_shuffle_partitions
+
+    return n_files or derive_shuffle_partitions(sf_dir)
+
+
+def write_zorder_events(spark: SparkSession, sf_dir: str, n_files: int | None = None) -> str:
+    return ZORDER_EVENTS.rebuild(spark, sf_dir, n_files=_n_files(sf_dir, n_files))
+
+
+def ensure_zorder_events(spark: SparkSession, sf_dir: str, n_files: int | None = None) -> str:
+    return ZORDER_EVENTS.ensure(spark, sf_dir, n_files=_n_files(sf_dir, n_files))
+
+
+def zorder_pruned_files(meta: dict, path: str, user_hi_exclusive: int | None = None) -> list[str] | None:
+    """File names of the z-layout at `path` overlapping `user_id <
+    user_hi_exclusive`, from its fresh meta record's per-file boxes — or
+    None when the record carries no boxes. Pruning only SHRINKS the read
+    set; callers still apply the exact predicate, so results are
+    unchanged by construction."""
     stats = meta.get("file_stats")
     if not stats:
         return None
@@ -234,32 +226,6 @@ def zorder_pruned_files(
         if user_hi_exclusive is None or s["u_lo"] < user_hi_exclusive
     ]
     return [os.path.join(path, fn) for fn in keep]
-
-
-def ensure_zorder_events(
-    spark: SparkSession, sf_dir: str, n_files: int | None = None
-) -> str:
-    """Serve-or-build for the z-ordered layout: reuse when the
-    CAS-committed freshness record (manifest commit_meta — the repo's
-    one artifact protocol) matches the current events files and file
-    count, rebuild otherwise — the same lifecycle every maintained
-    artifact here has (bucketed facts, LSH bands, BM25/IVF indexes)."""
-    from ..session import derive_shuffle_partitions
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import read_meta
-
-    from ..sources.manifest import commit_meta
-
-    path = zorder_events_path(sf_dir)
-    n = n_files or derive_shuffle_partitions(sf_dir)
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == table_stat_signature(sf_dir, ("events",))
-        and meta.get("n_files") == n
-        and meta.get("layout_rev") == ZORDER_LAYOUT_REV
-    ):
-        return path
-    return write_zorder_events(spark, sf_dir, n_files=n)
 
 
 # The 2-D predicate: a 3-day window AND the bottom decile of users.

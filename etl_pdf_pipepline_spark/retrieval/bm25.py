@@ -57,33 +57,68 @@ def bm25_scores(
     the same work a posting-list index union would do.
     """
     # The postings/doc-stats pair IS the FTS index (reference S12,
-    # /root/reference/src/load/lancedb_store.py:104-112). Within a session
-    # we .cache() both: Spark's cache manager matches canonicalized plans,
-    # so every query against the same corpus (bm25, hybrid, routed,
-    # context) reuses one materialization instead of re-tokenizing — the
-    # same build-once-query-many contract as the reference's index. At
+    # src/load/lancedb_store.py:104-112). Within a session
+    # both are cached once per distinct corpus lineage, so every query
+    # against the same corpus (bm25, hybrid, routed, context) reuses one
+    # materialization instead of re-tokenizing — the same
+    # build-once-query-many contract as the reference's index. At
     # cluster scale the same DataFrames are persisted as a bucketed-by-term
     # parquet/Delta table instead of executor memory (persist_index below).
-    postings = build_postings(docs, id_col, text_col).cache()
-    doc_stats = build_doc_stats(postings).cache()
-    _CACHED_INDEXES.append((postings, doc_stats))
+    postings, doc_stats = _live_index(docs, id_col, text_col)
     return _score_postings(postings, doc_stats, query_terms, k1, b)
 
 
-# Every live (cached) index registered here so long-lived sessions (the
-# REST API, notebook sessions) can drop them: each DISTINCT corpus lineage
-# pins one materialization in executor memory until released (re-caching
-# an identical canonical plan is a no-op, so per-query calls don't stack).
-_CACHED_INDEXES: list[tuple[DataFrame, DataFrame]] = []
+# Every live (cached) index, one per DISTINCT corpus lineage, keyed by the
+# session and the postings plan's semantic hash, so long-lived sessions
+# (the REST API, notebook sessions) can drop them: each lineage pins one
+# materialization in executor memory until released.
+_CACHED_INDEXES: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
+
+
+def _lineage(docs: DataFrame, id_col: str, text_col: str):
+    """(registry key, postings plan, registered entry or None)."""
+    postings = build_postings(docs, id_col, text_col)
+    key = (id(docs.sparkSession), postings.semanticHash())
+    hit = _CACHED_INDEXES.get(key)
+    if hit is not None and not (
+        hit[0].sparkSession is docs.sparkSession and hit[0].sameSemantics(postings)
+    ):
+        hit = None
+    return key, postings, hit
+
+
+def _live_index(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, DataFrame]:
+    key, postings, hit = _lineage(docs, id_col, text_col)
+    if hit is not None:
+        return hit
+    _unpersist(_CACHED_INDEXES.pop(key, None))  # a hash collision or a dead session
+    entry = (postings.cache(), build_doc_stats(postings).cache())
+    _CACHED_INDEXES[key] = entry
+    return entry
+
+
+def _unpersist(entry) -> None:
+    if entry is not None:
+        entry[1].unpersist()
+        entry[0].unpersist()
+
+
+def release_index(docs: DataFrame, id_col: str, text_col: str) -> bool:
+    """Unpersist the live index of one corpus lineage (e.g. a serving view
+    an upload or delete superseded); False when none is registered."""
+    key, _postings, hit = _lineage(docs, id_col, text_col)
+    if hit is None:
+        return False
+    _unpersist(_CACHED_INDEXES.pop(key))
+    return True
 
 
 def release_indexes() -> int:
     """Unpersist all cached live indexes; returns how many registrations
     were dropped. Idempotent — double-unpersist is a Spark no-op."""
     n = len(_CACHED_INDEXES)
-    for postings, doc_stats in _CACHED_INDEXES:
-        doc_stats.unpersist()
-        postings.unpersist()
+    for entry in _CACHED_INDEXES.values():
+        _unpersist(entry)
     _CACHED_INDEXES.clear()
     return n
 
@@ -195,62 +230,57 @@ def _write_term_df(postings: DataFrame, path: str, mode: str, n_buckets: int) ->
     )
 
 
-# Driver-side term-df lookups, memoized per (dir, file-stat signature,
-# query-term set): a warm lookup is a dict hit; a cold one is a pyarrow
-# row-group-pruned read of a tiny table — no Spark job either way (the
-# same pattern as corpus_scalars' literal fold).
-_TERM_DF_CACHE: dict[tuple[str, str, frozenset], dict[str, int]] = {}
+# Driver-side term-df lookups: term_df dir -> (its file-stat signature,
+# {term: df}). A warm lookup is a dict hit; a cold term is a pyarrow
+# row-group-pruned read of a tiny table — no Spark job either way (the same
+# pattern as corpus_scalars' literal fold). Entries are per TERM, so memory
+# is bounded by the vocabulary, not by the number of distinct queries; a
+# changed signature (extend, compaction, rebuild) drops the dir's entries.
+_TERM_DF_CACHE: dict[str, tuple[str, dict[str, int]]] = {}
 
 
-def _term_df_lookup(path: str, query_terms: list[str]) -> dict[str, int] | None:
-    """{term: df} for the query terms from the index's term dictionary,
-    or None when this index predates the term_df layout (pre-r13 builds
-    keep working through the legacy two-scan plan)."""
-    import os
-
+def _term_df_lookup(path: str, query_terms: list[str]) -> dict[str, int]:
+    """{term: df} for the query terms found in the index's term dictionary."""
     from ..sources.catalog import path_stat_signature
 
     d = f"{path}/term_df"
-    if not os.path.isdir(d):
-        return None
-    key = (d, path_stat_signature(d), frozenset(query_terms))
-    hit = _TERM_DF_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import pyarrow.dataset as pads
+    sig = path_stat_signature(d)
+    entry = _TERM_DF_CACHE.get(d)
+    if entry is None or entry[0] != sig:
+        entry = _TERM_DF_CACHE[d] = (sig, {})
+    known = entry[1]
+    terms = set(query_terms)
+    missing = sorted(terms - known.keys())
+    if missing:
+        import pyarrow.dataset as pads
 
-    terms = sorted(set(query_terms))
-    tbl = pads.dataset(d, format="parquet").to_table(
-        filter=pads.field("term").isin(terms), columns=["term", "df"]
-    )
-    out: dict[str, int] = {}
-    for term, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-        out[term] = out.get(term, 0) + int(df)
-    _TERM_DF_CACHE[key] = out
-    return out
+        tbl = pads.dataset(d, format="parquet").to_table(
+            filter=pads.field("term").isin(missing), columns=["term", "df"]
+        )
+        for term, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
+            known[term] = known.get(term, 0) + int(df)
+    return {t: known[t] for t in terms if t in known}
 
 
-def persist_index(
+def write_index(
     docs: DataFrame,
     id_col: str,
     text_col: str,
     path: str,
     n_buckets: int = 16,
-    source_signature: str | None = None,
-) -> None:
+) -> dict[str, int]:
     """Materialize the index as parquet: postings hash-partitioned by term
     (repartition(n_buckets, term) + sorted within partitions), the
-    per-doc length DENORMALIZED into each posting row, and the corpus
-    scalars (N, avgdl) as a one-row table. A query's term lookup then
-    touches only the partitions/row-groups its terms hash to, and scoring
-    needs NO doc-side join at all — the same reason Lucene stores norms
-    inline in the postings rather than in a separate doc table. The dl
-    copy costs ~one long per posting row at build time (amortized across
-    every query); at sf100 it removed a 1.5M×4M-row doc_stats shuffle
-    from every query (SCALING.md r5). doc_stats is still written for
-    consumers that want the per-doc view. Rebuild cadence mirrors the
-    reference: once per ingest batch
-    (/root/reference/src/pipeline.py:164-165)."""
+    per-doc length DENORMALIZED into each posting row, and the term
+    dictionary. A query's term lookup then touches only the
+    partitions/row-groups its terms hash to, and scoring needs NO
+    doc-side join at all — the same reason Lucene stores norms inline in
+    the postings rather than in a separate doc table. The dl copy costs
+    ~one long per posting row at build time (amortized across every
+    query); at sf100 it removed a 1.5M×4M-row doc_stats shuffle from
+    every query (SCALING.md r5). doc_stats is still written for
+    consumers that want the per-doc view. Returns the corpus scalars
+    {n, total_dl} for the index's meta record."""
     postings = build_postings(docs, id_col, text_col)
     doc_stats = build_doc_stats(postings)
     # Term dictionary FIRST (r13): (term, df) — the Lucene docFreq slot.
@@ -268,75 +298,53 @@ def persist_index(
         .parquet(f"{path}/postings")
     )
     doc_stats.write.mode("overwrite").parquet(f"{path}/doc_stats")
-    # Corpus scalars (N, total token count; avgdl derives) are published
-    # through the manifest CAS (sources/manifest.py commit_meta) — the
-    # repo's one artifact-publication protocol. The commit is atomic, so
-    # a reader never sees a half-replaced record (the crash window a
-    # mode('overwrite') parquet rewrite of the old {path}/corpus dir
-    # had), and the exact integer total lets extend_index merge scalars
-    # exactly instead of reconstructing the sum from a rounded double.
+    # Corpus scalars (N, total token count; avgdl derives) go into the
+    # CAS-committed meta record; the exact integer total lets
+    # extend_index merge scalars exactly instead of reconstructing the
+    # sum from a rounded double.
     row = doc_stats.agg(
         F.count("*").alias("n"), F.sum("dl").alias("total_dl")
     ).collect()[0]
+    return {"n": int(row["n"]), "total_dl": int(row["total_dl"] or 0)}
+
+
+# Persisted-index layout version, a required key of the meta record:
+# 2 (r13) = postings + doc_stats + the term_df dictionary. An index whose
+# record lacks it predates the dictionary; it is never served, and
+# ensure_index rebuilds it.
+LAYOUT_VERSION = 2
+
+
+def persist_index(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    path: str,
+    n_buckets: int = 16,
+    source_signature: str | None = None,
+) -> None:
+    """write_index, then publish the meta record (corpus scalars, layout
+    version, and the caller's source signature when given) through the
+    manifest CAS. Rebuild cadence mirrors the reference: once per ingest
+    batch (reference src/pipeline.py:164-165)."""
     from ..sources.manifest import commit_meta
 
-    # source_signature (when the caller supplies one — a stat digest of
-    # the source docs table) rides in the same record, making the index
-    # serve-or-build capable via ensure_index.
-    payload = {
-        "n": int(row["n"]),
-        "total_dl": int(row["total_dl"] or 0),
-        "layout": _LAYOUT_VERSION,
-    }
+    payload = {**write_index(docs, id_col, text_col, path, n_buckets), "layout": LAYOUT_VERSION}
     if source_signature is not None:
         payload["source_signature"] = source_signature
     commit_meta(path, payload)
 
 
-# Persisted-index layout version. 2 (r13) = postings + doc_stats + the
-# term_df dictionary; 1 (implicit, pre-r13 records without the key) =
-# no term dictionary. ensure_index rebuilds on a version mismatch so a
-# warm warehouse upgrades to the one-scan serving plan at its next
-# ingest slot; readers never require the new layout (legacy indexes
-# serve through the two-scan fallback).
-_LAYOUT_VERSION = 2
-
-
 def corpus_scalars(spark, path: str) -> tuple[int, int]:
-    """(n, total_dl) for a persisted index, wherever this index's
-    vintage stored them:
-
-    1. the CAS-committed meta record (r8+, the one commit path);
-    2. the legacy one-row {path}/corpus parquet (pre-r8 indexes keep
-       working — migration is transparent, the next extend_index
-       re-publishes through the CAS);
-    3. a legacy corpus row WITHOUT total_dl (pre-r7): reconstructed
-       exactly as sum(dl) over doc_stats — one aggregate over the
-       per-doc table, the fallback ADVICE r7 asked for instead of a
-       bare KeyError.
-    """
-    import os
-
+    """(n, total_dl) of a persisted index, from its meta record."""
     from ..sources.manifest import read_meta
 
     meta = read_meta(path)
-    if meta is not None and "n" in meta and "total_dl" in meta:
-        return int(meta["n"]), int(meta["total_dl"])
-    corpus_dir = f"{path}/corpus"
-    if os.path.isdir(corpus_dir):
-        row = spark.read.parquet(corpus_dir).collect()[0]
-        n = int(row["n"])
-        if "total_dl" in row.asDict():
-            return n, int(row["total_dl"])
-        total = spark.read.parquet(f"{path}/doc_stats").agg(
-            F.sum("dl").alias("s")
-        ).collect()[0]["s"]
-        return n, int(total or 0)
-    raise FileNotFoundError(
-        f"no corpus scalars at {path}: neither a committed meta record "
-        "(_manifests) nor a legacy corpus/ parquet exists — run "
-        "persist_index to (re)build this index"
-    )
+    if meta is None or "n" not in meta or "total_dl" not in meta:
+        raise FileNotFoundError(
+            f"no corpus scalars at {path}: run persist_index to (re)build this index"
+        )
+    return int(meta["n"]), int(meta["total_dl"])
 
 
 def ensure_index(
@@ -347,29 +355,22 @@ def ensure_index(
     source_signature: str,
     n_buckets: int = 16,
 ) -> str:
-    """Serve-or-build for the persisted BM25 index — the FTS face of the
-    lifecycle the other maintained artifacts have (ensure_ivf_index,
-    ensure_lsh_band_index, bucketed facts): reuse when the CAS-committed
-    freshness record carries a matching `source_signature`, rebuild
-    otherwise. Records without a signature (pre-r10 indexes, or builds
-    that never passed one) always rebuild — absence means unknown
-    provenance, and serving unknown-provenance postings silently is the
-    stale-index bug this record exists to prevent. Steady-state loop:
-    ingest delta → extend_index(..., source_signature=post_ingest_sig) →
-    the next ensure_index serves the EXTENDED files with no rebuild
-    (pinned by tests/test_layout_freshness.py)."""
+    """Serve-or-build for a persisted BM25 index at a caller-chosen path:
+    reuse when the meta record carries this `source_signature` and the
+    current layout version, rebuild otherwise. A record without a
+    signature means unknown provenance and always rebuilds. Steady-state
+    loop: ingest delta → extend_index(..., source_signature=post_ingest_sig)
+    → the next ensure_index serves the EXTENDED files with no rebuild
+    (pinned by tests/test_index_freshness.py)."""
+    from ..sources.artifact import meta_matches
     from ..sources.manifest import read_meta
 
-    meta = read_meta(path) or {}
-    if (
-        meta.get("source_signature") == source_signature
-        and meta.get("layout") == _LAYOUT_VERSION
-    ):
-        return path
-    persist_index(
-        docs, id_col, text_col, path,
-        n_buckets=n_buckets, source_signature=source_signature,
-    )
+    want = {"source_signature": source_signature, "layout": LAYOUT_VERSION}
+    if not meta_matches(read_meta(path), want):
+        persist_index(
+            docs, id_col, text_col, path,
+            n_buckets=n_buckets, source_signature=source_signature,
+        )
     return path
 
 
@@ -387,7 +388,8 @@ def extend_index(
     instead of re-tokenizing the corpus, the same once-per-ingest-batch
     lifecycle the reference's Tantivy index has
     (/root/reference/src/load/lancedb_store.py:104-112) but with the
-    rebuild replaced by an append.
+    rebuild replaced by an append. The index must carry a meta record
+    (persist_index / ensure_index wrote it).
 
     Contract: delta ids are NEW (the admission pipeline guarantees it
     upstream, exactly as near_dup_incremental assumes) — re-sending an
@@ -399,10 +401,10 @@ def extend_index(
     in the last ulp because double summation order follows file layout
     — under the round(4) serving contract the results are equal, and
     tests/test_bm25_incremental.py asserts both bounds):
-    (a) df is derived at query time from the postings themselves
-        (bm25_scores_from_index groupBy(term) over matched rows), so
-        appended posting lists update df with no stored statistic to
-        go stale;
+    (a) df lives in the term dictionary, whose rows readers sum per
+        term: the delta's own (term, df) rows append beside the base
+        rows, and delta ids are NEW docs, so the per-term totals equal a
+        full rebuild's;
     (b) dl is per-doc and denormalized into each appended row, same as
         the build path;
     (c) the corpus scalars merge EXACTLY: the stored integer total_dl
@@ -421,30 +423,13 @@ def extend_index(
     complete record), so a crash mid-extend leaves scores slightly
     UNDER-counting avgdl/n on the new rows rather than referencing
     postings that don't exist."""
-    spark = new_docs.sparkSession
-    # Read the base scalars BEFORE any append: the legacy-layout
-    # fallback reconstructs total_dl from doc_stats, which must not yet
-    # contain this delta (reading after the append double-counts it).
-    # These pre-read values are only the RACE-FREE fallback seed — the
-    # commit itself goes through update_meta's pinned-version CAS, which
-    # re-adds THIS delta to whatever payload actually won any concurrent
-    # race (two concurrent extends both land; last-writer-wins would
-    # silently drop one delta's counts from the scalars forever).
-    legacy_n, legacy_total = corpus_scalars(spark, path)
+    corpus_scalars(new_docs.sparkSession, path)  # no record: fail before any append
     delta_postings = build_postings(new_docs, id_col, text_col)
     delta_stats = build_doc_stats(delta_postings).cache()
     try:
         # Delta term-df rows land first (see _write_term_df's crash-order
-        # rationale); readers sum rows per term, and delta ids are NEW
-        # docs by contract, so delta counts add exactly. Legacy (pre-r13)
-        # indexes have no term dictionary: appending only the delta's
-        # counts would leave a PARTIAL dictionary that under-counts every
-        # base term, so they stay dictionary-less until the next full
-        # rebuild (ensure_index upgrades on layout mismatch).
-        import os as _os
-
-        if _os.path.isdir(f"{path}/term_df"):
-            _write_term_df(delta_postings, path, "append", n_buckets)
+        # rationale).
+        _write_term_df(delta_postings, path, "append", n_buckets)
         (
             delta_postings.join(delta_stats, "doc_key")
             .repartition(n_buckets, "term")
@@ -457,18 +442,20 @@ def extend_index(
         dn, dtotal = int(d["c"]), int(d["s"] or 0)
         from ..sources.manifest import update_meta
 
-        def add_delta(current: dict | None) -> dict:
-            base_n = int(current["n"]) if current else legacy_n
-            base_total = int(current["total_dl"]) if current else legacy_total
+        # The commit is update_meta's pinned-version CAS, which re-adds
+        # THIS delta to whatever payload won any concurrent race (two
+        # concurrent extends both land; last-writer-wins would silently
+        # drop one delta's counts from the scalars forever).
+        def add_delta(current: dict) -> dict:
             # Preserve every other key (notably source_signature) — the
             # scalar accumulation must not strip the freshness record —
             # and ADVANCE the signature when the caller hands in the
             # post-ingest one, in the SAME pinned-version CAS commit as
             # the scalars, so ensure_index serves the extended files
             # instead of full-rebuilding (the r9 economics defect).
-            out = dict(current or {})
-            out["n"] = base_n + dn
-            out["total_dl"] = base_total + dtotal
+            out = dict(current)
+            out["n"] = int(current["n"]) + dn
+            out["total_dl"] = int(current["total_dl"]) + dtotal
             if source_signature is not None:
                 out["source_signature"] = source_signature
             return out
@@ -516,8 +503,6 @@ def compact_index(spark, path: str, n_buckets: int = 16) -> dict[str, int]:
         ),
     ):
         live = f"{path}/{sub}"
-        if not os.path.isdir(live):
-            continue  # pre-r13 index without a term dictionary
         tmp = live + "__compacting"
         writer(spark.read.parquet(live)).write.mode("overwrite").parquet(tmp)
         swap_directory(live, tmp)
@@ -539,10 +524,8 @@ def scored_from_index_sqltext(
     scalars as double literals — the same plan bm25_scores_from_index
     built op by op, now one spark.sql round-trip for the whole tree
     (r13 construction-floor fix, guide §1: the op-by-op build cost
-    ~0.16 s of py4j per bm25_search call at sf0.1). Returns None when
-    this index predates the term_df layout (callers keep the legacy
-    two-scan plan) so the emitted rows are identical by construction.
-    Also the composable kw-leg fragment for the hybrid family's single
+    ~0.16 s of py4j per bm25_search call at sf0.1). Returns None when no
+    query term is in the dictionary: nothing scores. Also the composable kw-leg fragment for the hybrid family's single
     SQL text (retrieval/queries.py)."""
     if not query_terms:
         return None
@@ -587,11 +570,10 @@ def bm25_scores_from_index(
       so scoring is matched-rows algebra + one groupBy(doc_key) — the
       1.5M-doc doc_stats join the live path needs is gone.
 
-    The corpus scalars enter the plan as LITERALS (one driver-side meta
-    read — corpus_scalars — instead of the old one-row parquet
-    crossJoin): constants fold into the whole-stage-codegen score
-    expression, and the plan is one scan + one broadcast join + one
-    aggregate.
+    The corpus scalars and the query terms' df enter the plan as
+    LITERALS (one driver-side meta read — corpus_scalars — and one
+    term-dictionary lookup): constants fold into the whole-stage-codegen
+    score expression, and the plan is one scan + one aggregate.
 
     Same scores as the live path (same dl, same scalars): proven by the
     shared oracle row and the round-trip test."""
@@ -601,43 +583,15 @@ def bm25_scores_from_index(
     # of the served bm25/hybrid walls at sf0.1.
     from ..sources.catalog import read_parquet_cached
 
-    matched = read_parquet_cached(spark, f"{path}/postings").filter(
-        F.col("term").isin(list(set(query_terms)))
-    )
-    if not query_terms:
-        return (
-            matched.select(F.col("doc_key"), F.lit(0.0).alias("score")).limit(0)
-        )
-    n, total_dl = corpus_scalars(spark, path)
-    # Same division the live path's aggregate performs: exact integer
-    # total over exact integer count, in double.
-    avgdl = float(total_dl) / n if n else 0.0
+    post = read_parquet_cached(spark, f"{path}/postings")
     # r13: df comes from the index's term dictionary (one driver-side
-    # pyarrow read, memoized) and folds into the plan as a literal map —
-    # the pre-r13 plan recomputed df with a SECOND scan of the
-    # term-pruned postings plus a groupBy and a BroadcastExchange (a
-    # separate driver job on every query). With the literal fold the
-    # whole serving query is: one postings scan → score projection →
-    # groupBy(doc_key). The arithmetic is unchanged: df enters the SAME
-    # _term_score_sql tree as a bigint, n/avgdl as the same double
-    # literals, so per-(doc,term) scores are bit-identical to the
-    # two-scan plan (element_at only substitutes where the join probe
-    # did). Pre-r13 indexes without a term_df dir fall back to the
-    # two-scan plan.
+    # pyarrow read, memoized) and folds into the plan as a literal map,
+    # so the whole serving query is: one postings scan → score
+    # projection → groupBy(doc_key).
     sql = scored_from_index_sqltext(spark, path, query_terms, k1, b)
-    if sql is not None:
-        return spark.sql(sql, post=read_parquet_cached(spark, f"{path}/postings"))
-    df_counts = matched.groupBy("term").agg(F.count("*").alias("df"))
-    return (
-        matched.join(F.broadcast(df_counts), "term")
-        # One JVM-parsed scoring expression (r12): the corpus scalars fold
-        # in as double literals (repr() round-trips exactly), same tree and
-        # same arithmetic as the Column form it replaces — construction is
-        # one py4j call instead of ~15.
-        .withColumn("term_score", F.expr(_term_score_sql(k1, b, n=n, avgdl=avgdl)))
-        .groupBy("doc_key")
-        .agg(F.sum("term_score").alias("score"))
-    )
+    if sql is None:
+        return post.select(F.col("doc_key"), F.lit(0.0).alias("score")).limit(0)
+    return spark.sql(sql, post=post)
 
 
 def bm25_topk_from_index(

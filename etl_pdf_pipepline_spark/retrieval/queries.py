@@ -14,8 +14,9 @@ from pyspark.sql import functions as F
 from ..functions.text import title_from_filename, tokens
 from ..functions.vectors import as_double, as_double_sql, cosine, cosine_expr
 from ..registry import query
+from ..sources.artifact import Artifact, warehouse_path
 from ..sources.catalog import load_table
-from .bm25 import bm25_scores, bm25_topk
+from .bm25 import LAYOUT_VERSION, bm25_scores, bm25_topk, write_index
 from .hybrid import context_budget_cut, rank_top, route_topic, rrf_fuse
 
 QUERY_TERMS = ["spark", "join", "fast", "table"]
@@ -232,7 +233,7 @@ def bm25_topk_from_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     build+query cycle, not a warm cache."""
     from .bm25 import bm25_topk_from_index
 
-    path = _build_bm25_index(spark, sf_dir)
+    path = BM25_INDEX.rebuild(spark, sf_dir)
     return (
         bm25_topk_from_index(spark, path, QUERY_TERMS, 15)
         .withColumnRenamed("doc_key", "doc_id")
@@ -263,20 +264,12 @@ def bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index's 55.8 s-build / 8.1 s-marginal split (SCALING.md). The gate
     row intentionally pays base-build + extend + query every call, like
     the other index rows; the steady-state cost is the extend alone."""
-    import hashlib
-    import os
-
     from .bm25 import bm25_topk_from_index, extend_index, persist_index
 
     docs = load_table(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 20 != 0)
     delta = docs.filter(F.col("doc_id") % 20 == 0)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"bm25_index_incr_{tag}",
-    )
+    path = warehouse_path(sf_dir, "bm25_index_incr")
     persist_index(base, "doc_id", "text", path)
     extend_index(delta, "doc_id", "text", path)
     return (
@@ -285,81 +278,30 @@ def bm25_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_index_path(sf_dir: str) -> str:
-    """This corpus's shared BM25 index location under the repo warehouse
-    (path keyed by corpus dir so gate runs at different sf don't collide)."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        f"bm25_index_{tag}",
-    )
+def _write_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> dict:
+    return write_index(load_table(spark, sf_dir, "documents"), "doc_id", "text", path)
 
 
-def _build_bm25_index(spark: SparkSession, sf_dir: str) -> str:
-    """Persist the BM25 index for this corpus under the repo warehouse
-    (path keyed by corpus dir) and return its path. The freshness
-    signature is recorded too: the index just built IS fresh, and the
-    always-build gate rows (bm25_topk_from_index, hybrid_rrf_from_index)
-    share this path with the r11 routing — omitting the signature here
-    would silently flip bm25_index_servable off for every later
-    bm25_search in the session (code-review r11 finding)."""
-    from ..sources.catalog import table_stat_signature
-    from .bm25 import persist_index
-
-    docs = load_table(spark, sf_dir, "documents")
-    path = _bm25_index_path(sf_dir)
-    persist_index(
-        docs,
-        "doc_id",
-        "text",
-        path,
-        source_signature=table_stat_signature(sf_dir, ("documents",)),
-    )
-    return path
+# This corpus's shared BM25 index — the ingest-time lifecycle slot
+# (reference: Tantivy index built once per ingest batch,
+# src/pipeline.py:164-165). Its record carries the corpus scalars, the
+# documents signature and the layout version, so steady-state searches
+# route to the files while the documents table is unchanged.
+BM25_INDEX = Artifact(
+    "bm25_index", ("documents",), _write_bm25_index, lambda sf_dir: {"layout": LAYOUT_VERSION}
+)
+_bm25_index_path = BM25_INDEX.path
 
 
 def ensure_bm25_index(spark: SparkSession, sf_dir: str) -> str:
-    """Serve-or-build for the shared corpus BM25 index — the ingest-time
-    lifecycle slot (reference: Tantivy index built once per ingest batch,
-    /root/reference/src/pipeline.py:164-165). Persists WITH a freshness
-    signature, so bm25_index_servable can route steady-state searches to
-    the files; reuses the index while the documents table is unchanged."""
-    from ..sources.catalog import table_stat_signature
-    from .bm25 import ensure_index
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ensure_index(
-        docs,
-        "doc_id",
-        "text",
-        _bm25_index_path(sf_dir),
-        table_stat_signature(sf_dir, ("documents",)),
-    )
+    return BM25_INDEX.ensure(spark, sf_dir)
 
 
 def bm25_index_servable(spark: SparkSession, sf_dir: str) -> bool:
-    """Routing predicate for the keyword-search family, the FTS twin of
-    plans/bucketed.bucketed_layout_exists: True when this corpus's
-    persisted postings index carries a freshness signature matching the
-    current documents table. Honors force_scan_path (the same override
-    bench.py uses to publish the scan-path walls beside the served
-    ones), and never triggers a build — a serving query must not hide an
-    index build inside its wall; ensure_bm25_index is the ingest-slot
-    verb."""
-    from ..plans.bucketed import scan_forced
-    from ..sources.catalog import table_stat_signature
-    from ..sources.manifest import read_meta
-
-    if scan_forced():
-        return False
-    meta = read_meta(_bm25_index_path(sf_dir)) or {}
-    return meta.get("source_signature") == table_stat_signature(
-        sf_dir, ("documents",)
-    )
+    """Routing predicate for the keyword-search family: never builds — a
+    serving query must not hide an index build inside its wall;
+    ensure_bm25_index is the ingest-slot verb."""
+    return BM25_INDEX.servable(sf_dir) is not None
 
 
 @query(
@@ -515,7 +457,7 @@ def hybrid_rrf_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     26.8 s per query; from the index it is ~5 s (SCALING.md r5)."""
     from .bm25 import bm25_scores_from_index
 
-    path = _build_bm25_index(spark, sf_dir)
+    path = BM25_INDEX.rebuild(spark, sf_dir)
     kw_rank = rank_top(bm25_scores_from_index(spark, path, QUERY_TERMS), 20, "doc_key")
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -272,11 +272,9 @@ def _raw_stats_manifest_root(table_dir: str, col: str) -> str:
     (table directory, column) — the at-ingest stats record VERDICT r13
     ask #3 names, reusing the z-layout's CAS-meta pattern. Keyed on the
     absolute source path so distinct corpora never share a record."""
-    import hashlib
+    from .artifact import path_tag, warehouse_dir
 
-    tag = hashlib.md5(f"{table_dir}::{col}".encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", f"raw_stats_{tag}")
+    return warehouse_dir(f"raw_stats_{path_tag(f'{table_dir}::{col}')}")
 
 
 def _footer_minmax(fp: str, col: str) -> tuple[int, int] | None:
@@ -328,11 +326,12 @@ def _raw_file_stats(sf_dir: str, table: str, col: str) -> dict | None:
     if hit is not None and hit[0] == sig:
         return hit[1]
 
+    from .artifact import meta_matches
     from .manifest import commit_meta, read_meta
 
     mroot = _raw_stats_manifest_root(path, col)
-    meta = read_meta(mroot) or {}
-    if meta.get("source_signature") == sig and meta.get("col") == col:
+    meta = read_meta(mroot)
+    if meta_matches(meta, {"source_signature": sig, "col": col}):
         raw = meta.get("stats")
         stats = (
             {os.path.join(path, fn): (int(lo), int(hi)) for fn, (lo, hi) in raw.items()}

@@ -241,3 +241,24 @@ def test_images_endpoints(client):
     raw = client.get(f"/images/{img['id']}/file")
     assert raw.status_code == 200 and len(raw.data) > 0
     assert client.get("/images/img-999999/file").status_code == 404
+
+
+def test_search_keeps_one_live_index_per_serving_view(spark):
+    """The live BM25 registry holds one entry per corpus lineage: repeated
+    searches (vector mode indexes nothing) reuse it, and an upload
+    releases the serving view it supersedes."""
+    from etl_pdf_pipepline_spark.api.engine import SparkEngine
+    from etl_pdf_pipepline_spark.retrieval import bm25
+
+    bm25.release_indexes()
+    engine = SparkEngine(spark, SF_SMALL)
+    try:
+        queries = ("spark join", "fast table", "window data")
+        for i in range(20):
+            engine.search(queries[i % 3], mode=("keyword", "vector", "hybrid")[i % 3])
+        assert len(bm25._CACHED_INDEXES) == 1
+        engine.upload("registry.pdf", b"%PDF-1.4 spark registry lineage body")
+        engine.search("spark registry", mode="keyword")
+        assert len(bm25._CACHED_INDEXES) <= 1
+    finally:
+        engine.close()

@@ -101,9 +101,47 @@ def test_release_indexes_unpersists_cached_postings(spark):
     )
     bm25.bm25_scores(df, "doc_id", "text", ["spark"]).collect()
     assert len(bm25._CACHED_INDEXES) >= 1
-    cached = [p for p, _ in bm25._CACHED_INDEXES]
+    cached = [p for p, _ in bm25._CACHED_INDEXES.values()]
     n = bm25.release_indexes()
     assert n >= 1 and not bm25._CACHED_INDEXES
     for p in cached:
         assert not p.is_cached
     assert bm25.release_indexes() == 0  # idempotent
+
+
+def test_term_df_cache_is_bounded_by_the_vocabulary(spark, tmp_path):
+    """The term-dictionary memo holds one entry per TERM, not per query:
+    200 distinct term sets over the corpus vocabulary leave at most one
+    entry per vocabulary word, and an extend (new signature) drops them."""
+    import itertools
+    import random
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from etl_pdf_pipepline_spark.retrieval import bm25
+    from etl_pdf_pipepline_spark.sources.catalog import load_table
+
+    from conftest import SF_SMALL
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    path = str(tmp_path / "idx")
+    bm25.persist_index(docs.filter(F.col("doc_id") % 5 != 0), "doc_id", "text", path)
+    vocab = sorted(set(pq.read_table(f"{path}/term_df").column("term").to_pylist()))
+    assert len(vocab) <= 31
+    term_sets = [c for n in (1, 2, 3, 4) for c in itertools.combinations(vocab, n)]
+    random.Random(0).shuffle(term_sets)
+    assert len(term_sets) >= 200
+    bm25._TERM_DF_CACHE.clear()
+    for terms in term_sets[:200]:
+        got = bm25._term_df_lookup(path, list(terms))
+        assert set(got) == set(terms)
+    assert sum(len(t) for _sig, t in bm25._TERM_DF_CACHE.values()) <= 31
+
+    want = bm25._term_df_lookup(path, vocab)
+    tbl = pq.read_table(f"{path}/term_df").to_pylist()
+    assert want == {t: sum(r["df"] for r in tbl if r["term"] == t) for t in vocab}
+    bm25.extend_index(docs.filter(F.col("doc_id") % 5 == 0), "doc_id", "text", path)
+    after = bm25._term_df_lookup(path, vocab[:1])
+    assert set(bm25._TERM_DF_CACHE[f"{path}/term_df"][1]) == set(vocab[:1])
+    assert after[vocab[0]] >= want[vocab[0]]

@@ -90,42 +90,6 @@ def test_compact_preserves_scores_and_folds_files(spark, tmp_path):
         assert round(v, 4) == round(after_scores[k], 4), k
 
 
-def test_extend_migrates_legacy_corpus_layouts(spark, tmp_path):
-    """Pre-r8 indexes stored scalars as a one-row {path}/corpus parquet;
-    pre-r7 ones lacked total_dl entirely. extend_index must accept both
-    (ADVICE r7: fall back to reconstructing total_dl from doc_stats)
-    and re-publish through the CAS meta, scoring identically to a full
-    rebuild afterward."""
-    import shutil
-
-    docs = load_table(spark, SF, "documents")
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    delta = docs.filter(F.col("doc_id") % 5 == 0)
-
-    for drop_total_dl in (False, True):
-        path = str(tmp_path / f"legacy_{drop_total_dl}")
-        persist_index(base, "doc_id", "text", path)
-        n, total = corpus_scalars(spark, path)
-        # devolve to the legacy layout: corpus parquet, no meta record
-        cols = [F.lit(n).cast("long").alias("n")]
-        if not drop_total_dl:
-            cols.append(F.lit(total).cast("long").alias("total_dl"))
-        cols.insert(0, F.lit(float(total) / n).alias("avgdl"))
-        spark.range(1).select(*cols).write.parquet(f"{path}/corpus")
-        shutil.rmtree(f"{path}/_manifests")
-        assert corpus_scalars(spark, path) == (n, total)
-
-        extend_index(delta, "doc_id", "text", path)
-        full_path = str(tmp_path / f"full_{drop_total_dl}")
-        persist_index(docs, "doc_id", "text", full_path)
-        assert corpus_scalars(spark, path) == corpus_scalars(spark, full_path)
-        incr = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-        full = dict(bm25_scores_from_index(spark, full_path, TERMS).collect())
-        assert set(incr) == set(full)
-        for k in full:
-            assert round(full[k], 4) == round(incr[k], 4), k
-
-
 def test_term_df_dictionary_matches_live_scores(spark, tmp_path):
     """r13 layout: the persisted term dictionary's literal-df serving
     plan must score bit-identically to the live (tokenize + query-time
@@ -151,20 +115,50 @@ def test_term_df_dictionary_matches_live_scores(spark, tmp_path):
         assert round(live[k], 4) == round(got[k], 4), k
 
 
-def test_legacy_index_without_term_df_still_serves(spark, tmp_path):
-    """Pre-r13 indexes (no term_df dir) must keep serving through the
-    two-scan fallback with identical scores."""
+def test_legacy_layout_index_not_servable_and_rebuilt(spark, tmp_path):
+    """A pre-r13 index (no term dictionary, no `layout` key in its meta
+    record) is never served: the routing predicate refuses it, and both
+    serve-or-build faces — the corpus artifact and the path-generic
+    ensure_index — rebuild it into the current layout, which then serves
+    the same scores."""
+    import os
     import shutil
 
-    path = str(tmp_path / "idx")
-    docs = load_table(spark, SF, "documents")
-    persist_index(docs, "doc_id", "text", path)
-    with_dict = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-    shutil.rmtree(f"{path}/term_df")
-    legacy = dict(bm25_scores_from_index(spark, path, TERMS).collect())
-    assert set(with_dict) == set(legacy)
-    for k in with_dict:
-        assert abs(with_dict[k] - legacy[k]) <= 1e-12 * max(abs(with_dict[k]), 1.0), k
+    from etl_pdf_pipepline_spark.retrieval import bm25
+    from etl_pdf_pipepline_spark.retrieval.queries import (
+        bm25_index_servable,
+        ensure_bm25_index,
+    )
+    from etl_pdf_pipepline_spark.sources.catalog import table_stat_signature
+    from etl_pdf_pipepline_spark.sources.manifest import read_meta, update_meta
+
+    def devolve(path):
+        shutil.rmtree(f"{path}/term_df")
+        update_meta(path, lambda cur: {k: v for k, v in cur.items() if k != "layout"})
+
+    def rebuilt(path):
+        return os.path.isdir(f"{path}/term_df") and read_meta(path)["layout"] == bm25.LAYOUT_VERSION
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    shutil.copy(f"{SF}/documents.parquet", corpus / "documents.parquet")
+    path = ensure_bm25_index(spark, str(corpus))
+    try:
+        want = dict(bm25_scores_from_index(spark, path, TERMS).collect())
+        devolve(path)
+        assert not bm25_index_servable(spark, str(corpus))
+        assert ensure_bm25_index(spark, str(corpus)) == path and rebuilt(path)
+        assert bm25_index_servable(spark, str(corpus))
+        assert dict(bm25_scores_from_index(spark, path, TERMS).collect()) == want
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+    docs = load_table(spark, str(corpus), "documents")
+    sig = table_stat_signature(str(corpus), ("documents",))
+    own = str(tmp_path / "idx")
+    persist_index(docs, "doc_id", "text", own, source_signature=sig)
+    devolve(own)
+    assert bm25.ensure_index(docs, "doc_id", "text", own, sig) == own and rebuilt(own)
 
 
 def test_extend_keeps_term_df_in_sync(spark, tmp_path):

@@ -14,9 +14,10 @@ bm25_incremental_index / near_dup_incremental); these tests pin the
 ECONOMICS: after a source ingest + extend, ensure_* serves the extended
 files with zero rebuild, and the served layout really contains the delta.
 
-The rebuild detector monkeypatches the family's persist function in its
-module namespace (ensure_* resolves it by global name at call time), so
-a rebuild can't hide.
+The rebuild detector monkeypatches the data-writing `build` of the
+family's Artifact (sources/artifact.py) — or, for BM25's caller-chosen
+paths, bm25.persist_index, which ensure_index resolves by global name at
+call time — so a rebuild can't hide.
 """
 
 from __future__ import annotations
@@ -85,7 +86,7 @@ def test_ensure_ivf_after_extend_serves_without_rebuild(
         assert delta_ids, "fixture must hold back a non-empty delta"
         sim.extend_ivf_index(spark, delta, path, source_signature=new_sig)
 
-        _fail_on_call(monkeypatch, sim, "persist_ivf_index")
+        _fail_on_call(monkeypatch, sim.IVF_INDEX, "build")
         assert sim.ensure_ivf_index(spark, growing_corpus) == path
         # the served layout really contains the delta vectors
         served = {
@@ -117,15 +118,15 @@ def test_ensure_ivf_rebuilds_on_legacy_meta_without_variant_keys(
 
         update_meta(path, strip_variant)
         calls = []
-        real = sim.persist_ivf_index
-        sim_persist = lambda *a, **k: (calls.append(1), real(*a, **k))[1]  # noqa: E731
+        real = sim.IVF_INDEX.build
+        counting = lambda *a, **k: (calls.append(1), real(*a, **k))[1]  # noqa: E731
         try:
-            sim.persist_ivf_index, orig = sim_persist, sim.persist_ivf_index
+            sim.IVF_INDEX.build = counting
             # (direct attr swap: monkeypatch-free so the finally below
             # restores even if the assert throws)
             assert sim.ensure_ivf_index(spark, growing_corpus) == path
         finally:
-            sim.persist_ivf_index = real
+            sim.IVF_INDEX.build = real
         assert calls == [1], "legacy variant-less meta must force a rebuild"
         meta = read_meta(path)
         assert meta["partial"] is False and meta["exclude_vec_id"] is None
@@ -147,7 +148,7 @@ def test_ensure_lsh_after_extend_serves_without_rebuild(
         assert delta_ids and all(i % 20 != 0 for i in delta_ids)
         dedup.extend_lsh_band_index(spark, delta, path, source_signature=new_sig)
 
-        _fail_on_call(monkeypatch, dedup, "persist_lsh_band_index")
+        _fail_on_call(monkeypatch, dedup.LSH_BANDS, "build")
         assert dedup.ensure_lsh_band_index(spark, growing_corpus, exclude_mod=20) == path
         served = {
             r.doc_id
@@ -258,7 +259,7 @@ def test_steady_state_admission_loop_two_days(spark, tmp_path, monkeypatch):
         day1.coalesce(1).write.mode("append").parquet(str(corpus / "documents.parquet"))
         sig1 = table_stat_signature(str(corpus), ("documents",))
         dedup.extend_lsh_band_index(spark, day1, path, source_signature=sig1)
-        _fail_on_call(monkeypatch, dedup, "persist_lsh_band_index")
+        _fail_on_call(monkeypatch, dedup.LSH_BANDS, "build")
         assert dedup.ensure_lsh_band_index(spark, str(corpus), exclude_mod=20) == path
         monkeypatch.undo()
 
@@ -313,8 +314,8 @@ def test_ensure_cc_labels_after_extend_serves_without_rebuild(
             spark, delta_bands, band_path, label_path, source_signature=new_sig
         )
 
-        _fail_on_call(monkeypatch, dedup, "persist_cc_labels")
-        _fail_on_call(monkeypatch, dedup, "persist_lsh_band_index")
+        _fail_on_call(monkeypatch, dedup.CC_LABELS, "build")
+        _fail_on_call(monkeypatch, dedup.LSH_BANDS, "build")
         assert dedup.ensure_cc_labels(spark, growing_corpus, exclude_mod=20) == label_path
         assert (
             dedup.ensure_lsh_band_index(spark, growing_corpus, exclude_mod=20)

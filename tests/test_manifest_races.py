@@ -265,7 +265,7 @@ def test_signature_ensure_raced_by_ingest_never_overclaims(
             # The ingest commits immediately after ensure reads the source
             # signature (the widest window: build + commit both run against
             # a corpus that has already moved on).
-            real_sig = D._docs_signature
+            real_sig = D.SIGNATURES[family].signature
 
             def racing_sig(sf_dir):
                 s = real_sig(sf_dir)
@@ -274,12 +274,12 @@ def test_signature_ensure_raced_by_ingest_never_overclaims(
                     _touch_docs(sig_corpus)
                 return s
 
-            monkeypatch.setattr(D, "_docs_signature", racing_sig)
+            monkeypatch.setattr(D.SIGNATURES[family], "signature", racing_sig)
         else:
             # The ingest commits between the data write and the meta CAS —
-            # the last instant it can land inside the window. ensure
-            # re-imports commit_meta from the manifest module per call, so
-            # patching the module attribute intercepts it.
+            # the last instant it can land inside the window. Artifact
+            # calls commit_meta through the manifest module, so patching
+            # the module attribute intercepts it.
             real_commit = MM.commit_meta
 
             def racing_commit(root, payload):
@@ -331,7 +331,7 @@ def test_int8_codes_ensure_raced_by_ingest_never_overclaims(
     try:
         fired = {"n": 0}
         if ingest_at == "after_sig_read":
-            real_sig = S._emb_signature
+            real_sig = S.INT8_CODES.signature
 
             def racing_sig(sf_dir):
                 s = real_sig(sf_dir)
@@ -340,7 +340,7 @@ def test_int8_codes_ensure_raced_by_ingest_never_overclaims(
                     touch_emb()
                 return s
 
-            monkeypatch.setattr(S, "_emb_signature", racing_sig)
+            monkeypatch.setattr(S.INT8_CODES, "signature", racing_sig)
         else:
             real_commit = MM.commit_meta
 
